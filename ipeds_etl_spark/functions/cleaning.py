@@ -26,8 +26,12 @@ Capability parity (behavior, not code) with the reference record mapper:
   sha2-256 — the semantic contract (stable under field reordering,
   changes iff content changes) is unchanged.
 
-All of these are Column-in/Column-out builders over built-in functions:
-they inline into whole-stage codegen and cost nothing extra at 100 TB.
+All of these are Column-in/Column-out builders over built-in functions,
+so no Python runs per row. They nest: ``safe_int(coalesce_pick(...))``
+strips and sentinel-checks each value several times, which is fine for
+a few columns but not for a 100-field mapper (generated code past the
+JVM's 64 KB method limit). The registry's staged mapper therefore
+composes the SQL pieces below so that each value is cleaned once.
 """
 
 from __future__ import annotations
@@ -192,11 +196,24 @@ def clean_sentinels_sql(x: str) -> str:
     return f"(CASE WHEN {is_missing_sql(x)} THEN NULL ELSE {x} END)"
 
 
-def coalesce_pick_sql(*xs: str) -> str:
-    """SQL twin of ``coalesce_pick``."""
-    if not xs:
-        raise ValueError("coalesce_pick_sql requires at least one candidate")
-    return f"coalesce({', '.join(clean_sentinels_sql(x) for x in xs)})"
+def null_missing_stripped_sql(t: str) -> str:
+    """``clean_sentinels`` for a value that is already a stripped string:
+    NULL if empty or a sentinel code, else the value itself."""
+    return f"(CASE WHEN {t} IN ('', {_SENTINEL_LIST_SQL}) THEN NULL ELSE {t} END)"
+
+
+def parse_int_sql(s: str, sql_type: str = "INT") -> str:
+    """Regex-guarded integer parse of a stripped, cleaned string."""
+    return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS {sql_type})"
+
+
+def parse_double_sql(s: str) -> str:
+    """Regex-guarded double parse of a stripped, cleaned string."""
+    return (
+        f"(CASE WHEN {s} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
+        f"WHEN {s} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({s} AS DOUBLE) "
+        f"ELSE CAST(NULL AS DOUBLE) END)"
+    )
 
 
 def _stripped_clean_sql(x: str) -> str:
@@ -205,24 +222,17 @@ def _stripped_clean_sql(x: str) -> str:
 
 def safe_int_sql(x: str) -> str:
     """SQL twin of ``safe_int``."""
-    s = _stripped_clean_sql(x)
-    return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS INT)"
+    return parse_int_sql(_stripped_clean_sql(x))
 
 
 def safe_long_sql(x: str) -> str:
     """SQL twin of ``safe_long``."""
-    s = _stripped_clean_sql(x)
-    return f"try_cast(CASE WHEN {s} RLIKE {sql_lit(_INT_RE)} THEN {s} END AS BIGINT)"
+    return parse_int_sql(_stripped_clean_sql(x), "BIGINT")
 
 
 def safe_double_sql(x: str) -> str:
     """SQL twin of ``safe_double``."""
-    s = _stripped_clean_sql(x)
-    return (
-        f"(CASE WHEN {s} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
-        f"WHEN {s} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({s} AS DOUBLE) "
-        f"ELSE CAST(NULL AS DOUBLE) END)"
-    )
+    return parse_double_sql(_stripped_clean_sql(x))
 
 
 def safe_str_sql(x: str) -> str:

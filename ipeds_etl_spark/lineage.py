@@ -9,8 +9,9 @@ policy at ``architecture.md:91-99``):
 * ``source_trace``— one row per landed page: endpoint, year,
   source_url, source_hash, ingested_at.
 
-Counters are computed relationally (anti-join/semi-join counts), not by
-driver-side iteration; appends are tiny single-partition writes.
+Counters are computed relationally by the pipeline (one aggregate per
+load, ``pipeline._load_counts``), not by driver-side iteration; appends
+are tiny single-partition writes.
 """
 
 from __future__ import annotations
@@ -45,16 +46,6 @@ SOURCE_TRACE_SCHEMA = T.StructType(
         T.StructField("ingested_at", T.TimestampType(), False),
     ]
 )
-
-
-def merge_counts(target: DataFrame, source: DataFrame, pk: list[str]) -> tuple[int, int]:
-    """(rows_inserted, rows_updated) for an upsert of source into target
-    — inserted = source PKs absent from target; updated = present."""
-    src_keys = source.select(*pk).distinct()
-    tgt_keys = target.select(*pk).distinct()
-    inserted = src_keys.join(tgt_keys, pk, "left_anti").count()
-    updated = src_keys.join(tgt_keys, pk, "left_semi").count()
-    return inserted, updated
 
 
 def append_load_log(

@@ -48,11 +48,11 @@ def run_load(
     else:
         target = spark.createDataFrame([], registry.struct_type(endpoint))
     mapped = map_from_raw(spark, endpoint, raw_path, years=[year])
-    # Counts (and every other action on plans that scan the current core
-    # files) MUST run before the merge overwrites those files.
-    inserted, updated = lineage.merge_counts(target, mapped, list(ep.pk))
-    records_mapped = mapped.count()
-    write_core(spark, endpoint, mapped, core_path)
+    # One job for every counter and the years the merge touches. It must
+    # run before write_core: the merge overwrites the core files that
+    # ``target`` scans.
+    records_mapped, inserted, updated, years = _load_counts(target, mapped, list(ep.pk))
+    write_core(spark, endpoint, mapped, core_path, years=years)
     lineage.append_load_log(
         spark, meta_path, endpoint, year, year, inserted, updated, started
     )
@@ -65,6 +65,26 @@ def run_load(
         "rows_updated": updated,
         "raw_existing_before": existing,
     }
+
+
+def _load_counts(
+    target: DataFrame, mapped: DataFrame, pk: list[str]
+) -> tuple[int, int, int, list]:
+    """(records mapped, rows inserted, rows updated, distinct years) of
+    an upsert of ``mapped`` into ``target``, in one aggregate over
+    ``mapped`` left-joined to the target's keys. Records count rows,
+    duplicates included; inserted and updated count distinct source
+    PKs absent from / present in the target."""
+    hit = target.select(*pk).distinct().withColumn("__hit", F.lit(True))
+    joined = mapped.select(*dict.fromkeys([*pk, "year"])).join(hit, pk, "left")
+    key = F.struct(*pk)
+    row = joined.agg(
+        F.count(F.lit(1)),
+        F.count_distinct(F.when(F.col("__hit").isNull(), key)),
+        F.count_distinct(F.when(F.col("__hit"), key)),
+        F.collect_set("year"),
+    ).first()
+    return row[0], row[1], row[2], row[3]
 
 
 def rebuild_gold(spark: SparkSession, endpoint: str, warehouse: str) -> dict[str, int]:

@@ -8,10 +8,11 @@ merge idempotently into the typed core table keyed on the registry PK.
 
 Where the reference maps dict-at-a-time in Python and batches 1000-row
 upserts, this pipeline is a single declarative plan: explode →
-generated select of cleaned/cast/coalesced Column expressions (from
-``registry.mapper_columns``) → anti-join merge → per-year dynamic
-partition overwrite. No Python executes per record; the mapper select
-is whole-stage-codegen'd.
+generated, staged select that cleans, coalesces and casts every field
+(``registry.mapper_select_stages``) → anti-join merge → per-year
+dynamic partition overwrite. No Python executes per record, and the
+mapper stage compiles to one whole-stage-codegen class (pinned by
+``tests/test_pipeline_e2e.py`` with codegen fallback off).
 """
 
 from __future__ import annotations
@@ -37,16 +38,16 @@ def map_records(endpoint: str, records: DataFrame, rec_col: str = "rec") -> Data
     every registry field becomes safe_cast(coalesce_pick(candidates)),
     with ``year`` backfilled from the page when the record lacks it.
     """
-    # Two-stage SQL-text form: one selectExpr gateway call per stage
-    # instead of ~thousands of Py4J Column calls for a 100+-field
-    # contract, and a ~2.5× smaller analyzer tree than the one-shot
-    # SQL form (see registry.mapper_select_stages)
+    # SQL-text stages: one selectExpr gateway call per stage instead of
+    # thousands of Py4J Column calls for a 100-field contract
     from ipeds_etl_spark.functions.cleaning import sql_lit
 
-    s1, s2 = registry.mapper_select_stages(
-        endpoint, getter_sql=lambda name: f"{rec_col}[{sql_lit(name)}]"
+    out = registry.select_mapped(
+        records,
+        endpoint,
+        getter_sql=lambda name: f"{rec_col}[{sql_lit(name)}]",
+        keep=("page_year",),
     )
-    out = records.selectExpr(*s1, "page_year").selectExpr(*s2, "page_year")
     return out.withColumn("year", F.coalesce(F.col("year"), F.col("page_year"))).drop(
         "page_year"
     )
@@ -73,9 +74,13 @@ def write_core(
     mapped: DataFrame,
     core_path: str,
     backend: str = "inplace",
+    years: Sequence[int] | None = None,
 ) -> None:
     """Merge mapped records into the core table keyed on the registry
     PK, rewriting only the touched year partitions.
+
+    ``years`` are the distinct years in ``mapped`` when the caller has
+    already computed them; if omitted, one job collects them.
 
     ``backend="inplace"`` (default): plain partition-dir layout via the
     crash-recoverable marker swap (``merge.overwrite_partitions_staged``)
@@ -95,8 +100,9 @@ def write_core(
     recover_swaps(spark, core_path)
     if fsutil.table_exists(spark, core_path):
         target = spark.read.schema(registry.struct_type(endpoint)).parquet(core_path)
-        loaded_years = [r[0] for r in mapped.select("year").distinct().collect()]
-        touched = target.filter(F.col("year").isin(loaded_years))
+        if years is None:
+            years = [r[0] for r in mapped.select("year").distinct().collect()]
+        touched = target.filter(F.col("year").isin(list(years)))
         merged = upsert_on_pk(touched, mapped, ep.pk)
     else:
         merged = upsert_on_pk(mapped.limit(0), mapped, ep.pk)

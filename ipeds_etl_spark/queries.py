@@ -491,8 +491,8 @@ def q_upsert_on_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # P9 `row_mapper` — the registry-driven record normalizer (≅ reference
 # etl/mappers/directory.py:126-238) through its REAL code path: records
 # as map<string,string> (the raw-scan shape), every output column
-# generated as safe_cast(coalesce_pick(candidates)) by
-# registry.mapper_columns. Exercises alias fallback (instnm/stabbr),
+# generated as safe_cast(coalesce_pick(candidates)) by the staged
+# registry.mapper_select_stages. Exercises alias fallback (instnm/stabbr),
 # sentinel skip, and typed casts in one pass.
 # ---------------------------------------------------------------------------
 @_register(
@@ -541,16 +541,11 @@ def q_registry_mapper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ipeds_etl_spark.functions.cleaning import sql_lit
 
     recs = c.select(rec.alias("rec"))
-    # Two-stage SQL-text mapper: one selectExpr per stage (the Column
-    # form cost ~5s of Py4J per plan build; the one-shot SQL form
-    # still paid ~1s of JVM analysis walking the duplicated cast-guard
-    # subtrees — see registry.mapper_select_stages)
-    s1, s2 = registry.mapper_select_stages(
-        "directory", getter_sql=lambda name: f"rec[{sql_lit(name)}]"
-    )
-    return recs.selectExpr(*s1).selectExpr(*s2).select(
-        "unitid", "year", "inst_name", "state_abbr", "sector", "latitude"
-    )
+    # the staged SQL-text mapper the pipeline runs (the Column form
+    # costs ~5s of Py4J per plan build — see registry.mapper_select_stages)
+    return registry.select_mapped(
+        recs, "directory", getter_sql=lambda name: f"rec[{sql_lit(name)}]"
+    ).select("unitid", "year", "inst_name", "state_abbr", "sector", "latitude")
 
 
 # ---------------------------------------------------------------------------

@@ -14,8 +14,9 @@ drives everything —
 * ``struct_type(endpoint)``  → the typed Spark schema (≅ core DDL,
   reference ``etl/core_io.py:26-54``),
 * ``mapper_columns(endpoint)`` → a generated list of cleaned/cast/
-  coalesced Column expressions (≅ the row mapper, but columnar:
-  whole-stage-codegen'd, no Python in the loop),
+  coalesced Column expressions (≅ the row mapper, but columnar: no
+  Python in the loop); ``mapper_select_stages`` is its SQL-text form,
+  staged so each value is cleaned once, and is what the pipeline runs,
 * ``primary_key(endpoint)``  → merge/upsert conflict target.
 
 Field type codes: ``i``=int, ``l``=bigint, ``s``=string, ``d``=double.
@@ -26,21 +27,20 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ipeds_etl_spark.functions.cleaning import (
     coalesce_pick,
-    coalesce_pick_sql,
+    null_missing_stripped_sql,
+    parse_double_sql,
+    parse_int_sql,
     safe_double,
-    safe_double_sql,
     safe_int,
-    safe_int_sql,
     safe_long,
-    safe_long_sql,
     safe_str,
-    safe_str_sql,
+    strip_sql,
 )
 
 
@@ -248,115 +248,63 @@ def mapper_columns(
     return out
 
 
-_SQL_TYPES = {"i": "INT", "l": "BIGINT", "s": "STRING", "d": "DOUBLE"}
-_SQL_SAFE_CASTS = {
-    "i": safe_int_sql,
-    "l": safe_long_sql,
-    "s": safe_str_sql,
-    "d": safe_double_sql,
+_SQL_PARSES: dict[str, Callable[[str], str]] = {
+    "i": parse_int_sql,
+    "l": lambda p: parse_int_sql(p, "BIGINT"),
+    "s": lambda p: p,
+    "d": parse_double_sql,
 }
 
 
-def mapper_select_exprs(
-    endpoint: str,
-    available: set[str] | None = None,
-    getter_sql: Callable[[str], str] | None = None,
-) -> list[str]:
-    """SQL-string twin of :func:`mapper_columns` — same generated
-    normalization semantics, rendered as expression TEXT for one
-    ``df.selectExpr(*exprs)`` call.
+def mapper_select_stages(endpoint: str, getter_sql: Callable[[str], str]) -> list[list[str]]:
+    """SQL-text form of :func:`mapper_columns` as four projections, one
+    ``selectExpr`` each, in which every value is computed once:
 
-    Why: the Column form costs a Py4J round trip per method call; for
-    the 102-column directory mapper that was ~5s of driver time per
-    plan build. The SQL form is a single gateway call parsed JVM-side
-    (~50ms). Both forms derive from the same registry and the same
-    cleaning constants; row-level parity is pinned by
-    ``tests/test_registry.py`` and the ``registry_mapper`` oracle row.
+    1. strip each distinct candidate key (``__k<i>``);
+    2. null its empty and sentinel values;
+    3. per field, ``coalesce`` the cleaned candidates (``__f<j>``);
+    4. apply the field's regex-guarded cast. A string field needs no
+       second clean: a stripped, non-missing value stays so.
 
-    ``getter_sql`` maps a candidate field name to a SQL expression —
-    default backtick-quoted identifier; pass e.g.
-    ``lambda n: f"rec['{n}']"`` for map-typed records.
+    A field is thus the stripped first candidate that is not missing —
+    the same rows as ``safe_cast(coalesce_pick(...))`` (pinned by
+    ``tests/test_registry.py``), without its nesting, which strips and
+    sentinel-checks every candidate up to five times. Nested, the
+    directory mapper's generated class overruns the JVM's 64 KB method
+    limit and Spark silently runs it interpreted. Use
+    :func:`select_mapped` to apply the stages.
+
+    ``getter_sql`` maps a candidate field name to a SQL expression,
+    e.g. ``lambda n: f"rec['{n}']"`` for map-typed records.
     """
     ep = get_endpoint(endpoint)
-    if getter_sql is None:
-        def getter_sql(name: str) -> str:
-            return f"`{name}`"
-    out: list[str] = []
-    for f in ep.fields:
-        cands = [c for c in f.candidates if available is None or c in available]
-        if cands:
-            expr = _SQL_SAFE_CASTS[f.type](
-                coalesce_pick_sql(*[getter_sql(c) for c in cands])
-            )
-        else:
-            expr = f"CAST(NULL AS {_SQL_TYPES[f.type]})"
-        out.append(f"{expr} AS `{f.name}`")
-    return out
+    distinct = dict.fromkeys(c for f in ep.fields for c in f.candidates)
+    keys = {k: f"`__k{i}`" for i, k in enumerate(distinct)}
+    strip = [
+        f"{strip_sql(f'CAST({getter_sql(k)} AS STRING)')} AS {ref}" for k, ref in keys.items()
+    ]
+    clean = [f"{null_missing_stripped_sql(ref)} AS {ref}" for ref in keys.values()]
+    pick = [
+        f"coalesce({', '.join(keys[c] for c in f.candidates)}) AS `__f{j}`"
+        for j, f in enumerate(ep.fields)
+    ]
+    cast = [
+        f"{_SQL_PARSES[f.type](f'`__f{j}`')} AS `{f.name}`" for j, f in enumerate(ep.fields)
+    ]
+    return [strip, clean, pick, cast]
 
 
-def mapper_select_stages(
+def select_mapped(
+    df: DataFrame,
     endpoint: str,
-    available: set[str] | None = None,
-    getter_sql: Callable[[str], str] | None = None,
-) -> tuple[list[str], list[str]]:
-    """Two-stage form of :func:`mapper_select_exprs`: stage 1 projects
-    each field's stripped/coalesced candidate string ONCE, stage 2
-    applies the regex-guarded cast to that single-node reference.
-
-    Why: the one-shot form repeats the whole coalesce+trim subtree at
-    every reference inside each cast guard (2× for int/long, 3× for
-    double), so the analyzer/optimizer walk a tree ~2.5× bigger than
-    necessary — measured ~1.0 s of JVM plan time per build for the
-    102-column mapper, ~0.4 s with the split. Catalyst keeps the two
-    projections separate (CollapseProject refuses to duplicate
-    non-cheap expressions) but fuses them into one codegen stage, so
-    the runtime plan is unchanged. Semantics are bit-identical by
-    construction: stage 1 is exactly the shared ``s`` subexpression of
-    the one-shot form. Parity with :func:`mapper_columns` is pinned by
-    ``tests/test_registry.py``.
-    """
-    from ipeds_etl_spark.functions.cleaning import (
-        _DBL_RE,
-        _INT_RE,
-        _NAN_RE,
-        _stripped_clean_sql,
-        clean_sentinels_sql,
-        sql_lit,
-        strip_sql,
-    )
-
-    ep = get_endpoint(endpoint)
-    if getter_sql is None:
-        def getter_sql(name: str) -> str:
-            return f"`{name}`"
-    stage1: list[str] = []
-    stage2: list[str] = []
-    for f in ep.fields:
-        cands = [c for c in f.candidates if available is None or c in available]
-        if not cands:
-            stage2.append(f"CAST(NULL AS {_SQL_TYPES[f.type]}) AS `{f.name}`")
-            continue
-        picked = coalesce_pick_sql(*[getter_sql(c) for c in cands])
-        p = f"`__p_{f.name}`"
-        if f.type == "s":
-            # safe_str cleans OUTSIDE the strip — keep that order
-            stage1.append(f"{strip_sql(f'CAST({picked} AS STRING)')} AS {p}")
-            stage2.append(f"{clean_sentinels_sql(p)} AS `{f.name}`")
-        else:
-            stage1.append(f"{_stripped_clean_sql(picked)} AS {p}")
-            if f.type in ("i", "l"):
-                t = "INT" if f.type == "i" else "BIGINT"
-                stage2.append(
-                    f"try_cast(CASE WHEN {p} RLIKE {sql_lit(_INT_RE)} "
-                    f"THEN {p} END AS {t}) AS `{f.name}`"
-                )
-            else:
-                stage2.append(
-                    f"(CASE WHEN {p} RLIKE {sql_lit(_NAN_RE)} THEN CAST('NaN' AS DOUBLE) "
-                    f"WHEN {p} RLIKE {sql_lit(_DBL_RE)} THEN try_cast({p} AS DOUBLE) "
-                    f"ELSE CAST(NULL AS DOUBLE) END) AS `{f.name}`"
-                )
-    return stage1, stage2
+    getter_sql: Callable[[str], str],
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Apply :func:`mapper_select_stages` to ``df``, carrying the
+    ``keep`` columns through every stage."""
+    for stage in mapper_select_stages(endpoint, getter_sql=getter_sql):
+        df = df.selectExpr(*stage, *[f"`{c}`" for c in keep])
+    return df
 
 
 def drift_report(endpoint: str, incoming_fields: set[str]) -> dict[str, list[str]]:

@@ -150,6 +150,62 @@ def test_empty_load_is_noop(spark, warehouse):
     assert spark.read.parquet(f"{warehouse}/core/directory").count() == before
 
 
+def test_mapper_compiles_without_codegen_fallback(spark, tmp_path):
+    """Every endpoint's mapper, and a full directory load, run with
+    whole-stage codegen fallback off: a generated class that fails to
+    compile (e.g. past the JVM's 64 KB method limit) raises here
+    instead of silently running interpreted."""
+    from ipeds_etl_spark import registry
+    from ipeds_etl_spark.plans.core_pipeline import map_records
+
+    conf = "spark.sql.codegen.fallback"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        pages = raw_io.pages_from_fetched(spark, 2020, _fixture_pages(2020))
+        recs = raw_io.scan_records(pages)
+        for endpoint in registry.list_endpoints():
+            assert len(map_records(endpoint, recs).collect()) == 5, endpoint
+        metrics = pipeline.run_load(
+            spark, "directory", 2020, _fixture_pages(2020), str(tmp_path)
+        )
+        assert metrics["rows_inserted"] == 5
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_load_counters_and_touched_years(spark, tmp_path):
+    """One load whose pages hold a duplicate PK and a record of another
+    year: records count rows (duplicates included), inserted/updated
+    count distinct PKs, the record's own year partition is merged (not
+    replaced), and an untouched year's files are left alone."""
+    import os
+
+    wh = str(tmp_path)
+    part = f"{wh}/core/directory/year=2018"
+    pipeline.run_load(spark, "directory", 2018, [[{"unitid": 9, "inst_name": "Nine"}]], wh)
+    pipeline.run_load(
+        spark, "directory", 2019,
+        [[{"unitid": 2, "inst_name": "Two"}, {"unitid": 3, "inst_name": "Three"}]], wh,
+    )
+    untouched = {n: os.stat(f"{part}/{n}").st_mtime_ns for n in os.listdir(part)}
+    pages = [
+        [{"unitid": 1, "inst_name": "One"}, {"unitid": 2, "year": 2019, "inst_name": "Two b"}],
+        [{"unitid": 1, "year": 2020, "inst_name": "One b"}],
+    ]
+    metrics = pipeline.run_load(spark, "directory", 2020, pages, wh)
+    assert metrics["records_mapped"] == 3
+    assert (metrics["rows_inserted"], metrics["rows_updated"]) == (1, 1)
+    core = spark.read.parquet(f"{wh}/core/directory")
+    got = {(r["unitid"], r["year"]): r["inst_name"] for r in core.collect()}
+    assert got == {
+        (9, 2018): "Nine", (2, 2019): "Two b", (3, 2019): "Three", (1, 2020): "One b",
+    }
+    assert {n: os.stat(f"{part}/{n}").st_mtime_ns for n in os.listdir(part)} == untouched
+    last = spark.read.parquet(f"{wh}/meta/load_log").orderBy(F.col("load_id").desc()).first()
+    assert (last["rows_inserted"], last["rows_updated"]) == (1, 1)
+
+
 def test_http_ingest_offline_pagination():
     calls = []
 

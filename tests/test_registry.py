@@ -58,11 +58,12 @@ def test_drift_report():
 
 
 def test_mapper_sql_form_matches_column_form(spark):
-    """The selectExpr (SQL-text) mapper and the Column-builder mapper
-    must produce identical schemas AND identical rows — the SQL form
-    exists only to kill per-column Py4J build cost, never to change
-    semantics. Exercises sentinels, alias fallback, whitespace strip,
-    malformed ints/floats, and absent candidates."""
+    """The staged selectExpr (SQL-text) mapper the pipeline runs and the
+    Column-builder mapper must produce identical schemas AND identical
+    rows — the staged form exists only to kill per-column Py4J build
+    cost and to clean each value once, never to change semantics.
+    Exercises sentinels, alias fallback, whitespace strip, malformed
+    ints/floats, and absent candidates."""
     from pyspark.sql import functions as F
 
     from ipeds_etl_spark.functions.cleaning import sql_lit
@@ -76,13 +77,15 @@ def test_mapper_sql_form_matches_column_form(spark):
          "sector": "7", "latitude": "1e3"},
         {"unitid": "104", "year": "2020", "instnm": "D", "sector": "12.5",
          "latitude": "0x1p3"},
+        {"unitid": "105", "year": "2020", "inst_name": " -3\t", "instnm": " E ",
+         "sector": " +7 ", "latitude": " -1.0 ", "longitude": "-122.4"},
     ]
     df = spark.createDataFrame([(r,) for r in rows], "rec map<string,string>")
     col_form = df.select(
         *registry.mapper_columns("directory", getter=lambda n: F.col("rec").getItem(n))
     )
-    sql_form = df.selectExpr(
-        *registry.mapper_select_exprs("directory", getter_sql=lambda n: f"rec[{sql_lit(n)}]")
+    sql_form = registry.select_mapped(
+        df, "directory", getter_sql=lambda n: f"rec[{sql_lit(n)}]"
     )
     assert col_form.schema == sql_form.schema
     assert col_form.exceptAll(sql_form).count() == 0
